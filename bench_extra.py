@@ -46,8 +46,6 @@ def kg_stages(spark, n_convs: int, cpus: int, model_cost_ms: float = 0.0):
     from information_extraction_t5_spark.pipeline import (
         PipelineConfig,
         canonicalize_subjects,
-        candidates_to_triples,
-        extract_candidates,
         fuzzy_name_edges,
     )
     from information_extraction_t5_spark.operators.canonicalize import (

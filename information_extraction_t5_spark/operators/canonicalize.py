@@ -280,11 +280,13 @@ def canonical_entities(
     # match them, so they produced no edges); duplicate (mention, key)
     # rows emit duplicate edges — union-find is insensitive, the
     # distributed path dedups inside _symmetric, and the driver-path
-    # threshold count stays conservative (over-counts only).  The window
-    # is sort-based (spills, never materializes a group), so a hot key
-    # stays memory-safe — same bound as the old groupBy.
+    # threshold count stays conservative (over-counts only).  NULL
+    # mentions are dropped with them: min() skips them and the != filter
+    # discards them, so they only rode the shuffle.  WindowExec buffers
+    # each key group in a spillable buffer, so a hot key spills to disk
+    # instead of exhausting memory — same bound as the old groupBy.
     edges = (
-        keys.filter(F.col("key").isNotNull())
+        keys.filter(F.col("key").isNotNull() & F.col("mention").isNotNull())
         .withColumn("rep", F.min("mention").over(Window.partitionBy("key")))
         .filter(F.col("mention") != F.col("rep"))
         .select(F.col("mention").alias("src"), F.col("rep").alias("dst"))

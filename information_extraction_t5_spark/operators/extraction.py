@@ -1,9 +1,10 @@
 """Batched question-conditioned extraction (the model surface).
 
 The per-row inference loop of the reference (reference: models/qa_model.py:
-140-171, one driver-side batch at a time) becomes ONE distributed lineage:
+140-171, one driver-side batch at a time) becomes ONE distributed stage:
 
-    windows x broadcast(question registry)  ->  mapInPandas(batched model)
+    documents -> mapInPandas(windows x question registry -> batched model
+                             -> top-1 window -> triples)
 
 The extractor is pluggable and loaded once per executor Python worker
 (module-level cache), consuming Arrow record batches — no per-row Python in
@@ -18,7 +19,6 @@ the hot path.  Two implementations:
 from __future__ import annotations
 
 import math
-import os
 import re
 from typing import Iterator, List, Optional, Tuple
 
@@ -487,16 +487,16 @@ EXTRACTION_SCHEMA = (
 
 
 def top1_prereduce_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Map-side combiner for the top-1-window stage (r7).
+    """In-batch top-1 window of the fused extraction stage.
 
     Keeps, per (conv_id, qa_id) within one batch, the row minimizing
     (na_count asc, prob desc, window_id asc) — exactly top1_window's
     use_fewer_na=True ordering (na via str.count('N/A'), the literal twin
-    of the size(split(...))-1 expression).  argmin is associative, so
-    feeding per-batch winners into the downstream top1_window yields the
-    identical global winner under ANY partitioning — this only shrinks
-    the Arrow crossing and the top-1 shuffle from |windows x questions|
-    rows to |documents x questions|.
+    of the size(split(...))-1 expression).  When a batch holds every
+    window of its documents (run_extraction_to_triples) the per-batch
+    winner IS the global winner; argmin is associative, so per-batch
+    winners fed into top1_window would also yield it under any
+    partitioning.
     """
     if len(pdf) <= 1:
         return pdf
@@ -516,48 +516,29 @@ def top1_prereduce_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def run_extraction(
-    windows: DataFrame,
-    predicates: Optional[List[Predicate]] = None,
-    extractor: str = "regex",
-    model_name: Optional[str] = None,
-    model_cost_ms: float = 0.0,
-    choose_question: str = "first",
-    question_seed: int = 13,
-    tasks_per_core: Optional[int] = None,
-) -> DataFrame:
-    """mapInPandas batched extraction over *window* rows.
-
-    The question registry rides in the closure (it is tiny and static), so
-    each window's text crosses the Arrow boundary once — not once per
-    question — and the output carries ids + predictions only; window
-    payloads are rejoined downstream by (conv_id, window_id) when needed.
-    A seq2seq extractor expands (window x question) batches internally,
-    which is also where the GPU wants them.  ``choose_question`` selects
-    paraphrase variants ('first'/'random'/'all'; reference
-    basic_to_squad.py:16-41).
-    """
-    preds = predicates or DEFAULT_PREDICATES
-    registry_spec = [
+def _registry_spec(predicates: Optional[List[Predicate]]) -> list:
+    """Picklable (qa_id, field, questions, subfields) tuples the model
+    stage closes over (the registry is tiny and static)."""
+    return [
         (p.qa_id, p.field, tuple(p.questions), tuple(p.subfields))
-        for p in preds
+        for p in predicates or DEFAULT_PREDICATES
     ]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = _get_extractor(extractor, model_name, model_cost_ms)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            yield model.predict_windows(pdf, registry_spec,
-                                        choose=choose_question,
-                                        seed=question_seed)
 
-    cols = ["conv_id", "window_id", "window_offset", "window_text"]
-    slim = windows.select(*cols)
-    # pin parallelism for the model stage (see run_extraction_from_documents)
-    target = _model_stage_tasks(windows, tasks_per_core)
-    slim = slim.repartition(target)
-    return slim.mapInPandas(gen, schema=EXTRACTION_SCHEMA)
+def _windows_pdf(pdf: pd.DataFrame, window_spec) -> pd.DataFrame:
+    """Document batch (conv_id, text) -> window rows, built in the worker:
+    window texts never materialize as a Spark column."""
+    from information_extraction_t5_spark.core.windows import sliding_windows
+
+    win = {"conv_id": [], "window_id": [], "window_offset": [],
+           "window_text": []}
+    for cid, text in zip(pdf["conv_id"], pdf["text"]):
+        for w in sliding_windows(text or "", window_spec):
+            win["conv_id"].append(cid)
+            win["window_id"].append(w.window_id)
+            win["window_offset"].append(w.offset)
+            win["window_text"].append(w.text)
+    return pd.DataFrame(win)
 
 
 def run_extraction_to_triples(
@@ -569,58 +550,50 @@ def run_extraction_to_triples(
     model_cost_ms: float = 0.0,
     choose_question: str = "first",
     question_seed: int = 13,
-    tasks_per_core: Optional[int] = None,
-    pre_partitioned: bool = False,
+    ground: bool = False,
 ) -> DataFrame:
-    """Fully fused inference stage (r7): windows -> batched extraction ->
-    top-1 winner -> star triples in ONE Python crossing.
+    """Fully fused inference stage: windows -> batched extraction -> top-1
+    winner -> star triples (-> grounded spans) in ONE Python crossing.
 
     Safe because assemble_documents emits exactly one row per conv_id, so
     every (conv, qa) candidate set lives inside one Arrow batch and the
     in-batch top-1 (top1_prereduce_pdf — the exact top1_window
     use_fewer_na ordering) IS the global winner; star_triple_rows is the
-    differential-pinned best_to_triples kernel.  Replaces
-    run_extraction_from_documents -> shuffle -> top1_window ->
-    best_to_triples (a 1.4M-row shuffle + a second Arrow roundtrip at
-    bench sf1.0) on the inference path; the staged operators remain for
-    grounding/eval and the resumable catalog path.
-    Equivalence pinned by tests/test_top1_prereduce.py::
-    test_fused_triples_match_staged and the kg_triples oracle.
+    differential-pinned best_to_triples kernel.  ``ground=True`` locates
+    each triple's surface form in its winning window's text, still held
+    by the worker, and emits SPAN_SCHEMA rows.  Equivalence with the staged
+    route is pinned by tests/test_top1_prereduce.py::
+    test_fused_triples_match_staged (triples) and
+    tests/test_grounding_parity.py (spans).
+
+    Runs narrow: the caller pins the model-stage partitioning upstream
+    (pipeline.extract_triples — one REPARTITION_BY_NUM exchange on the
+    transcripts that assembly and this stage share).
     """
-    from information_extraction_t5_spark.core.windows import sliding_windows
     from information_extraction_t5_spark.operators.postprocess import (
+        SPAN_SCHEMA,
         TRIPLE_SCHEMA,
+        spans_pdf_from_triples,
         triples_pdf_from_best,
     )
 
-    preds = predicates or DEFAULT_PREDICATES
-    registry_spec = [
-        (p.qa_id, p.field, tuple(p.questions), tuple(p.subfields))
-        for p in preds
-    ]
+    registry_spec = _registry_spec(predicates)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = _get_extractor(extractor, model_name, model_cost_ms)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            win = {"conv_id": [], "window_id": [], "window_offset": [],
-                   "window_text": []}
-            for cid, text in zip(pdf["conv_id"], pdf["text"]):
-                for w in sliding_windows(text or "", window_spec):
-                    win["conv_id"].append(cid)
-                    win["window_id"].append(w.window_id)
-                    win["window_offset"].append(w.offset)
-                    win["window_text"].append(w.text)
-            scored = model.predict_windows(pd.DataFrame(win), registry_spec,
+            win = _windows_pdf(pdf, window_spec)
+            scored = model.predict_windows(win, registry_spec,
                                            choose=choose_question,
                                            seed=question_seed)
-            yield triples_pdf_from_best(top1_prereduce_pdf(scored))
+            triples = triples_pdf_from_best(top1_prereduce_pdf(scored))
+            yield spans_pdf_from_triples(triples, win) if ground else triples
 
-    docs = documents.select("conv_id", "text")
-    if not pre_partitioned:
-        docs = docs.repartition(_model_stage_tasks(documents, tasks_per_core))
-    return docs.mapInPandas(gen, schema=TRIPLE_SCHEMA)
+    return documents.select("conv_id", "text").mapInPandas(
+        gen, schema=SPAN_SCHEMA if ground else TRIPLE_SCHEMA
+    )
 
 
 def _model_stage_tasks(df: DataFrame,
@@ -631,13 +604,9 @@ def _model_stage_tasks(df: DataFrame,
     co-tenant steal burst, a long conversation) delays its own lane by a
     fraction of the stage instead of idling every other lane through a
     2-wave tail — measured on the 24k-conv calibrated scaling leg (r4).
-    Precedence: explicit ``tasks_per_core`` argument (threaded from
-    PipelineConfig.model_tasks_per_core) > SPARK_GRAFT_MODEL_TASKS_PER_CORE
-    env override > default 4.  Callers should prefer the config field —
-    mutating the env leaks process-global state (ADVICE r4)."""
-    per_core = (tasks_per_core if tasks_per_core is not None
-                else int(os.environ.get("SPARK_GRAFT_MODEL_TASKS_PER_CORE",
-                                        "4")))
+    ``tasks_per_core`` is threaded from PipelineConfig.model_tasks_per_core;
+    None means 4."""
+    per_core = 4 if tasks_per_core is None else tasks_per_core
     return max(df.sparkSession.sparkContext.defaultParallelism * per_core, 8)
 
 
@@ -651,63 +620,35 @@ def run_extraction_from_documents(
     choose_question: str = "first",
     question_seed: int = 13,
     tasks_per_core: Optional[int] = None,
-    pre_partitioned: bool = False,
-    prereduce_top1: bool = False,
 ) -> DataFrame:
-    """Fused window-assembly + extraction: one Arrow crossing per document.
+    """Fused window-assembly + extraction: one Arrow crossing per document,
+    emitting every per-window candidate (EXTRACTION_SCHEMA).
 
-    Window texts are produced and consumed inside the same Python worker —
-    they never materialize as a Spark column.  Use when downstream stages
-    don't need window_text (grounding off); otherwise build windows
-    explicitly and call run_extraction.
-
-    ``pre_partitioned=True`` skips the model-stage repartition: the caller
-    already pinned a REPARTITION_BY_NUM exchange upstream (e.g. on the
-    transcripts feeding assemble_documents, so assembly and the model
-    stage share ONE exchange — see pipeline.extract_candidates, r7) and
-    this stage runs narrow on that layout.
-
-    ``prereduce_top1=True`` applies top1_prereduce_pdf per output batch —
-    ONLY for consumers that feed top1_window(use_fewer_na=True) next (the
-    kg pipeline): the per-(conv, qa) winner is identical, the per-window
-    candidate rows are not emitted.
+    For consumers that need the candidates themselves — streaming, whose
+    micro-batches may hold several session rows of one conv_id, so the
+    top-1 must run across batches (top1_window) — and eval.  The kg
+    pipeline uses run_extraction_to_triples instead.
     """
-    from information_extraction_t5_spark.core.windows import sliding_windows
-
-    preds = predicates or DEFAULT_PREDICATES
-    registry_spec = [
-        (p.qa_id, p.field, tuple(p.questions), tuple(p.subfields))
-        for p in preds
-    ]
+    registry_spec = _registry_spec(predicates)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = _get_extractor(extractor, model_name, model_cost_ms)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            win = {"conv_id": [], "window_id": [], "window_offset": [],
-                   "window_text": []}
-            for cid, text in zip(pdf["conv_id"], pdf["text"]):
-                for w in sliding_windows(text or "", window_spec):
-                    win["conv_id"].append(cid)
-                    win["window_id"].append(w.window_id)
-                    win["window_offset"].append(w.offset)
-                    win["window_text"].append(w.text)
-            out = model.predict_windows(pd.DataFrame(win), registry_spec,
+            yield model.predict_windows(_windows_pdf(pdf, window_spec),
+                                        registry_spec,
                                         choose=choose_question,
                                         seed=question_seed)
-            yield top1_prereduce_pdf(out) if prereduce_top1 else out
 
     # The model stage pins its own parallelism: AQE coalesces upstream
     # shuffles by BYTES, which is exactly wrong before a compute-heavy UDF
     # (a few MB of documents can carry hours of model time — observed:
-    # byte-coalescing collapsed extraction to ONE task).
-    docs = documents.select("conv_id", "text")
-    if not pre_partitioned:
-        target = _model_stage_tasks(documents, tasks_per_core)
-        # round-robin with explicit count: a bare hash repartition on
-        # conv_id is collapsed by the optimizer into the upstream groupBy
-        # exchange, whose read AQE then byte-coalesces; round-robin (or a
-        # caller-side REPARTITION_BY_NUM, see pre_partitioned) survives both
-        docs = docs.repartition(target)
+    # byte-coalescing collapsed extraction to ONE task).  Round-robin with
+    # an explicit count: a bare hash repartition on conv_id is collapsed by
+    # the optimizer into the upstream groupBy exchange, whose read AQE then
+    # byte-coalesces; round-robin survives both.
+    docs = documents.select("conv_id", "text").repartition(
+        _model_stage_tasks(documents, tasks_per_core)
+    )
     return docs.mapInPandas(gen, schema=EXTRACTION_SCHEMA)

@@ -9,6 +9,8 @@
     aligned sub-row explosion with ~/* id suffixes and ORIG/DISJOINT flags
     (reference: postprocess.py:73-246).
   - ``to_triples``: star rows -> (subj, pred, obj, obj_raw, prob, span).
+  - ``triples_pdf_from_best`` / ``spans_pdf_from_triples``: the pandas row
+    kernels of the fused inference stage (top-1 rows -> triples -> spans).
 """
 from __future__ import annotations
 
@@ -262,34 +264,31 @@ SPAN_SCHEMA = (
 )
 
 
-def ground_spans(triples_with_windows: DataFrame,
-                 sentence_expansion: int = 1) -> DataFrame:
-    """Fuzzy span grounding: locate each object's surface form in its window
-    (reference: highlights.py:177-232).  Input must carry window_text."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ss, ee, hh = [], [], []
-            for obj, raw, sid, wtext in zip(
-                pdf["obj"], pdf["obj_raw"], pdf["sent_id"],
-                pdf["window_text"],
-            ):
-                target = raw if raw else obj
-                if sid is None or sid < 1 or not wtext:
-                    ss.append(None); ee.append(None); hh.append(None)
-                    continue
-                s, e, h = fuzzy_kernel.ground_answer(
-                    target, int(sid), wtext,
-                    sentence_expansion=sentence_expansion,
-                )
-                ss.append(s); ee.append(e); hh.append(h)
-            out = pdf.copy()
-            out["span_start"] = pd.array(ss, dtype="Int64")
-            out["span_end"] = pd.array(ee, dtype="Int64")
-            out["grounded"] = hh
-            yield out[
-                ["conv_id", "pred", "obj", "obj_raw", "window_id", "prob",
-                 "sent_id", "span_start", "span_end", "grounded"]
-            ]
-
-    return triples_with_windows.mapInPandas(gen, schema=SPAN_SCHEMA)
+def spans_pdf_from_triples(triples: pd.DataFrame,
+                           windows: pd.DataFrame) -> pd.DataFrame:
+    """Fuzzy span grounding: locate each triple's surface form in the text
+    of its window (reference: highlights.py:177-232).  ``windows`` carries
+    (conv_id, window_id, window_text); a triple whose window is absent,
+    empty or whose sent_id is unset gets NULL spans.  Row kernel of the
+    fused extraction stage (extraction.run_extraction_to_triples,
+    ground=True)."""
+    texts = dict(zip(zip(windows["conv_id"], windows["window_id"]),
+                     windows["window_text"]))
+    ss, ee, hh = [], [], []
+    for cid, wid, obj, raw, sid in zip(
+        triples["conv_id"], triples["window_id"], triples["obj"],
+        triples["obj_raw"], triples["sent_id"],
+    ):
+        wtext = texts.get((cid, wid))
+        if sid is None or sid < 1 or not wtext:
+            ss.append(None); ee.append(None); hh.append(None)
+            continue
+        s, e, h = fuzzy_kernel.ground_answer(
+            raw if raw else obj, int(sid), wtext, sentence_expansion=1,
+        )
+        ss.append(s); ee.append(e); hh.append(h)
+    out = triples.copy()
+    out["span_start"] = pd.array(ss, dtype="Int64")
+    out["span_end"] = pd.array(ee, dtype="Int64")
+    out["grounded"] = hh
+    return out

@@ -4,20 +4,19 @@ One declarative lineage (the reference's predict.py stages 2-8 as a single
 DataFrame program, SURVEY.md §3.3):
 
     transcripts
-      -> assemble_documents            (1 shuffle: groupBy conv_id)
-      -> sliding_windows_exact         (narrow, Arrow UDF kernel)
-      -> expand_questions              (broadcast join, narrow)
-      -> run_extraction                (mapInPandas, batched model)
-      -> top1_window                   (1 shuffle: window over conv,qa)
-      -> explode_compound              (narrow)
-      -> to_triples                    (narrow)
+      -> repartition(n, conv_id)       (1 shuffle, REPARTITION_BY_NUM)
+      -> assemble_documents            (narrow on that exchange)
+      -> run_extraction_to_triples     (ONE mapInPandas: windows, batched
+                                        model, top-1 window, compound
+                                        explode, triples[, span grounding])
       -> link_aliases                  (broadcast join)
       -> canonical_entities            (O(log n) small shuffles)
       -> materialize nodes/edges       (partitioned write + lineage)
 
 Checkpointed per stage via Catalog.stage — a killed run resumes from the
 last committed snapshot (reference cache-guard semantics,
-qa_model.py:144-145).
+qa_model.py:144-145).  ``stage_extract`` holds the unlinked triples,
+``stage_triples`` the alias-linked ones.
 """
 from __future__ import annotations
 
@@ -34,17 +33,12 @@ from information_extraction_t5_spark.operators.canonicalize import (
     canonical_entities,
 )
 from information_extraction_t5_spark.operators.extraction import (
-    run_extraction,
-    run_extraction_from_documents,
+    _model_stage_tasks,
+    run_extraction_to_triples,
 )
 from information_extraction_t5_spark.operators.linking import (
     alias_df,
     link_aliases,
-)
-from information_extraction_t5_spark.operators.postprocess import (
-    best_to_triples,
-    ground_spans,
-    top1_window,
 )
 from information_extraction_t5_spark.operators.windows import (
     assemble_documents,
@@ -63,15 +57,14 @@ class PipelineConfig:
     model_cost_ms: float = 0.0   # emulated per-window model latency (bench)
     model_tasks_per_core: Optional[int] = None
     # model-stage repartition width per core (extraction._model_stage_tasks);
-    # None = env override SPARK_GRAFT_MODEL_TASKS_PER_CORE, else default 4.
-    # Preferred over the env var: config travels with the job, the env var
-    # leaks process-global state (ADVICE r4).
+    # None = 4.  The only setting: it travels with the job config.
     choose_question: str = "first"   # 'first' | 'random' | 'all' paraphrase
     question_seed: int = 13          # seed for the 'random' md5 draw
     link_predicates: List[str] = field(
         default_factory=lambda: ["form.endereco.estado"]
     )
-    ground: bool = False          # fuzzy span grounding (extra Arrow stage)
+    ground: bool = False          # fuzzy span grounding inside the fused
+    # extraction stage (SPAN_SCHEMA output: span_start/span_end/grounded)
     fuzzy_link: bool = True       # LSH-blocked fuzzy name linking
     fuzzy_link_max_dist: int = 2  # levenshtein budget for blocked pairs
     fuzzy_hash: str = "md5"       # 'md5' = oracle-replayable signatures
@@ -96,52 +89,16 @@ def build_windows(transcripts: DataFrame, cfg: PipelineConfig) -> DataFrame:
     return sliding_windows_exact(docs, cfg.window)
 
 
-def extract_candidates(spark: SparkSession, transcripts: DataFrame,
-                       cfg: PipelineConfig) -> DataFrame:
-    """transcripts -> scored per-window predictions (pre-top-1).
-
-    Fused assembly->windows->extraction: window text never materializes as
-    a Spark column (one Arrow crossing per document).
-
-    ONE exchange end to end (r7): the model-stage task count is pinned as
-    a REPARTITION_BY_NUM hash exchange on the *transcripts* — the groupBy
-    inside assemble_documents is then already clustered by conv_id (no
-    second exchange), AQE honors the user-specified partition count (no
-    byte-coalescing collapse of the model stage), and extraction runs
-    narrow on the assembled documents.  Previously assembly shuffled the
-    turns AND a round-robin repartition re-shuffled every document text."""
-    from information_extraction_t5_spark.operators.extraction import (
-        _model_stage_tasks,
-    )
-
-    target = _model_stage_tasks(transcripts, cfg.model_tasks_per_core)
-    docs = assemble_documents(transcripts.repartition(target, "conv_id"))
-    return run_extraction_from_documents(
-        docs, cfg.window,
-        extractor=cfg.extractor, model_name=cfg.model_name,
-        model_cost_ms=cfg.model_cost_ms,
-        choose_question=cfg.choose_question,
-        question_seed=cfg.question_seed,
-        tasks_per_core=cfg.model_tasks_per_core,
-        pre_partitioned=True,
-        # scored feeds top1_window(use_fewer_na=True) in
-        # candidates_to_triples: reduce to the per-(conv, qa) winner
-        # inside the model task (argmin is associative) so the Arrow
-        # crossing and the top-1 shuffle carry |docs x questions| rows
-        # instead of |windows x questions| (r7)
-        prereduce_top1=True,
-    )
-
-
 def extract_triples(spark: SparkSession, transcripts: DataFrame,
                     cfg: PipelineConfig) -> DataFrame:
-    """transcripts -> candidate triples in one exchange + one Python stage
-    (pre alias-linking); see run_extraction_to_triples (r7)."""
-    from information_extraction_t5_spark.operators.extraction import (
-        _model_stage_tasks,
-        run_extraction_to_triples,
-    )
+    """transcripts -> unlinked candidate triples (spans when cfg.ground) in
+    one exchange + one Python stage; see run_extraction_to_triples.
 
+    The model-stage task count is pinned as a REPARTITION_BY_NUM hash
+    exchange on the *transcripts*: the groupBy inside assemble_documents is
+    then already clustered by conv_id (no second exchange), AQE honors the
+    user-specified partition count (no byte-coalescing collapse of the
+    model stage), and extraction runs narrow on the assembled documents."""
     target = _model_stage_tasks(transcripts, cfg.model_tasks_per_core)
     docs = assemble_documents(transcripts.repartition(target, "conv_id"))
     return run_extraction_to_triples(
@@ -150,35 +107,7 @@ def extract_triples(spark: SparkSession, transcripts: DataFrame,
         model_cost_ms=cfg.model_cost_ms,
         choose_question=cfg.choose_question,
         question_seed=cfg.question_seed,
-        tasks_per_core=cfg.model_tasks_per_core,
-        pre_partitioned=True,
-    )
-
-
-def candidates_to_triples(scored: DataFrame, cfg: PipelineConfig,
-                          spark: SparkSession,
-                          windows: Optional[DataFrame] = None) -> DataFrame:
-    """scored predictions -> linked candidate triples.
-
-    ``scored`` carries ids + predictions only — window payloads never ride
-    the top-1 shuffle; span grounding rejoins them from ``windows`` by
-    (conv_id, window_id)."""
-    slim = scored.select("conv_id", "qa_id", "window_id", "prediction", "prob")
-    best = top1_window(slim, use_fewer_na=True)
-    # fused explode+triple kernel: one Arrow crossing (the standalone
-    # explode_compound/to_triples operators serve the metric/eval paths)
-    triples = best_to_triples(best)
-    if cfg.ground:
-        if windows is None:
-            raise ValueError("span grounding needs the windows DataFrame")
-        wtexts = windows.select("conv_id", "window_id", "window_text")
-        triples = ground_spans(
-            triples.join(wtexts, ["conv_id", "window_id"], "left")
-        )
-    return link_aliases(
-        triples, alias_df(spark),
-        value_col="obj", out_col="obj",
-        predicates=cfg.link_predicates, pred_col="pred",
+        ground=cfg.ground,
     )
 
 
@@ -301,61 +230,24 @@ def run_pipeline(
     """Full pipeline; with a Catalog, every stage is a resumable snapshot."""
     cfg = cfg or PipelineConfig()
 
-    if catalog is None:
-        # no snapshot store: still cut lineage between stages so the
-        # extraction UDF runs exactly once (downstream actions + the
-        # connected-components loop would otherwise recompute it)
-        windows = None
-        if cfg.ground:
-            # grounding reuses windows twice -> truncate both lineages
-            windows = build_windows(transcripts, cfg).localCheckpoint()
-            scored = run_extraction(
-                windows, extractor=cfg.extractor, model_name=cfg.model_name,
-                model_cost_ms=cfg.model_cost_ms,
-                choose_question=cfg.choose_question,
-                question_seed=cfg.question_seed,
-                tasks_per_core=cfg.model_tasks_per_core,
-            ).localCheckpoint()
-            triples = candidates_to_triples(
-                scored, cfg, spark, windows=windows
-            ).localCheckpoint()
-            return canonicalize_subjects(triples, cfg)
-        # fully fused inference stage (r7): ONE pinned exchange feeds
-        # assembly + windows + extraction + in-batch top-1 + star triples
-        # in a single Python crossing (assemble emits one row per conv, so
-        # the in-batch winner IS the global winner); alias linking is a
-        # broadcast join on the triples.  The staged operators remain the
-        # grounding/eval/catalog path.
-        triples = link_aliases(
-            extract_triples(spark, transcripts, cfg), alias_df(spark),
+    def linked(triples: DataFrame) -> DataFrame:
+        return link_aliases(
+            triples, alias_df(spark),
             value_col="obj", out_col="obj",
             predicates=cfg.link_predicates, pred_col="pred",
-        ).localCheckpoint()
-        return canonicalize_subjects(triples, cfg)
+        )
 
-    windows = None
-    if cfg.ground:
-        windows = catalog.stage(
-            "stage_windows", lambda: build_windows(transcripts, cfg)
-        )
-        scored = catalog.stage(
-            "stage_extract",
-            lambda: run_extraction(windows, extractor=cfg.extractor,
-                                   model_name=cfg.model_name,
-                                   model_cost_ms=cfg.model_cost_ms,
-                                   choose_question=cfg.choose_question,
-                                   question_seed=cfg.question_seed,
-                                   tasks_per_core=cfg.model_tasks_per_core),
-        )
-    else:
-        scored = catalog.stage(
-            "stage_extract",
-            lambda: extract_candidates(spark, transcripts, cfg),
-        )
-    triples = catalog.stage(
-        "stage_triples",
-        lambda: candidates_to_triples(scored, cfg, spark, windows=windows),
+    if catalog is None:
+        # no snapshot store: still cut lineage before canonicalization so
+        # the extraction UDF runs exactly once (downstream actions + the
+        # connected-components loop would otherwise recompute it)
+        triples = linked(extract_triples(spark, transcripts, cfg))
+        return canonicalize_subjects(triples.localCheckpoint(), cfg)
+
+    extracted = catalog.stage(
+        "stage_extract", lambda: extract_triples(spark, transcripts, cfg)
     )
+    triples = catalog.stage("stage_triples", lambda: linked(extracted))
     final = catalog.stage(
         "stage_canonical",
         lambda: canonicalize_subjects(triples, cfg),

@@ -110,7 +110,10 @@ def stream_pipeline(
             model_name=cfg.model_name, model_cost_ms=cfg.model_cost_ms,
             choose_question=cfg.choose_question,
             question_seed=cfg.question_seed,
+            tasks_per_core=cfg.model_tasks_per_core,
         )
+        # top-1 across the micro-batch, not per Arrow batch: one batch may
+        # hold several session rows of one conv_id
         best = top1_window(
             scored.select("conv_id", "qa_id", "window_id",
                           "prediction", "prob")

@@ -97,11 +97,13 @@ def test_canonical_entities_null_keys_and_duplicates(spark):
       join-on-key form could never match NULLs; a naive window partition
       would silently merge every NULL-key mention into one entity);
     - duplicate (mention, key) rows emit duplicate edges, which must not
-      change any label (union-find is duplicate-insensitive).
+      change any label (union-find is duplicate-insensitive);
+    - a NULL mention under a shared key must not change its key's rep.
     Checked on BOTH CC paths.
     """
     rows = [
         ("A", "k1"), ("B", "k1"), ("B", "k1"),   # duplicate pair row
+        (None, "k1"),                            # NULL mention: no edge
         ("C", None), ("D", None),                # NULL keys: no link C-D
         ("E", "k2"),
     ]

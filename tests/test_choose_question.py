@@ -5,11 +5,12 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from information_extraction_t5_spark.core.registry import DEFAULT_PREDICATES
+from information_extraction_t5_spark.core.windows import WindowSpec
 from information_extraction_t5_spark.operators.extraction import (
     _variant_indices,
     expand_questions,
     registry_df,
-    run_extraction,
+    run_extraction_from_documents,
 )
 
 N_PREDICATES = len(DEFAULT_PREDICATES)
@@ -27,6 +28,20 @@ def _windows(spark):
     )
 
 
+def _extract(spark, **kwargs):
+    """Extraction over single-window documents (each text fits one
+    default-spec window), so candidates are one row per document x
+    question variant."""
+    docs = spark.createDataFrame(
+        [
+            ("c1", "Nome Completo Ana Souza\nBairro Centro"),
+            ("c2", "Data de Emissão 01/02/2020"),
+        ],
+        "conv_id string, text string",
+    )
+    return run_extraction_from_documents(docs, WindowSpec(), **kwargs)
+
+
 def _frame(df) -> pd.DataFrame:
     return (
         df.toPandas()
@@ -36,16 +51,14 @@ def _frame(df) -> pd.DataFrame:
 
 
 def test_first_is_default_and_unchanged(spark):
-    w = _windows(spark)
-    base = _frame(run_extraction(w))
-    first = _frame(run_extraction(w, choose_question="first"))
+    base = _frame(_extract(spark))
+    first = _frame(_extract(spark, choose_question="first"))
     pd.testing.assert_frame_equal(base, first)
     assert len(base) == 2 * N_PREDICATES
 
 
 def test_all_multiplies_by_variant_count(spark):
-    w = _windows(spark)
-    out = run_extraction(w, choose_question="all")
+    out = _extract(spark, choose_question="all")
     counts = {
         r["qa_id"]: r["n"]
         for r in out.groupBy("qa_id")
@@ -58,12 +71,11 @@ def test_all_multiplies_by_variant_count(spark):
 
 
 def test_random_is_deterministic_and_row_parity_with_first(spark):
-    w = _windows(spark)
-    a = _frame(run_extraction(w, choose_question="random", question_seed=13))
-    b = _frame(run_extraction(w, choose_question="random", question_seed=13))
+    a = _frame(_extract(spark, choose_question="random", question_seed=13))
+    b = _frame(_extract(spark, choose_question="random", question_seed=13))
     pd.testing.assert_frame_equal(a, b)
     # the regex model is question-invariant: 'random' == 'first' row-for-row
-    first = _frame(run_extraction(w))
+    first = _frame(_extract(spark))
     pd.testing.assert_frame_equal(a, first)
 
 

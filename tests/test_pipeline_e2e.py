@@ -86,15 +86,15 @@ def test_resume_skips_committed_stages(spark, tmp_path):
     # poison pill: resume must NOT recompute extraction
     import information_extraction_t5_spark.pipeline as pl
 
-    orig = pl.extract_candidates
-    pl.extract_candidates = lambda *a, **k: (_ for _ in ()).throw(
+    orig = pl.extract_triples
+    pl.extract_triples = lambda *a, **k: (_ for _ in ()).throw(
         AssertionError("extraction recomputed on resume")
     )
     try:
         again = run_pipeline(spark, t, catalog=cat)
         assert again.count() == n1
     finally:
-        pl.extract_candidates = orig
+        pl.extract_triples = orig
 
 
 def test_empty_input(spark):

@@ -95,12 +95,12 @@ def test_model_stage_parallelism_survives_aqe(spark):
     from information_extraction_t5_spark.data import synth
     from information_extraction_t5_spark.pipeline import (
         PipelineConfig,
-        extract_candidates,
+        extract_triples,
     )
 
     cfg = PipelineConfig()
     transcripts = synth.transcripts_df(spark, 40)
-    scored = extract_candidates(spark, transcripts, cfg)
+    scored = extract_triples(spark, transcripts, cfg)
 
     plan = _plan(scored)
     # exactly one exchange, user-pinned so AQE cannot byte-coalesce it
